@@ -21,6 +21,9 @@ object Bench {
       .config("spark.ui.enabled", "false"))
     spark.sparkContext.setLogLevel("WARN")
 
+    // queries that threw in any pass: named in both JSON lines and on
+    // stderr, so a failure never reads as a faster bench
+    val failed = scala.collection.mutable.SortedSet.empty[String]
     def run(name: String): Double = {
       val t0 = System.nanoTime()
       val elapsed =
@@ -28,7 +31,12 @@ object Bench {
           SparkEntry.queries(name)(spark, sfDir)
             .write.format("noop").mode("overwrite").save()
           (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => -1.0 }
+        } catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] FAILED $name: $e")
+            failed += name
+            -1.0
+        }
       // outside the timed section: drop the query's checkpointed blocks
       // so a 133-query sweep doesn't bleed storage memory into later
       // queries (see Tables.freeTransientBlocks). Janitor contract: no
@@ -150,8 +158,12 @@ object Bench {
       }
     } catch { case _: Throwable => None }
     val driftField = drift.map(d => s""","drift_ratio":$d""").getOrElse("")
+    val failedField = failed.map("\"" + _ + "\"")
+      .mkString(""","failed":[""", ",", "]")
+    if (failed.nonEmpty)
+      System.err.println(s"[bench] failed queries: ${failed.mkString(",")}")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec",$split$driftField,"queries":$qs,"sf":"$sfDir","passes":$passes}"""
+      s"""{"metric":"total","value":$total,"unit":"sec",$split$driftField$failedField,"queries":$qs,"sf":"$sfDir","passes":$passes}"""
     println(line)
     // The driver keeps only the last ~2000 chars of output; with 100+
     // queries the detail line above overflows that window and the head
@@ -159,7 +171,7 @@ object Bench {
     // always carries the headline numbers, and persist the full line.
     val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(8)
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec",$split$driftField,"nqueries":${results.size},"slowest":$slowest,"sf":"$sfDir","passes":$passes}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec",$split$driftField$failedField,"nqueries":${results.size},"slowest":$slowest,"sf":"$sfDir","passes":$passes}""")
     try {
       val p = java.nio.file.Paths.get("bench_detail.json")
       java.nio.file.Files.write(p, (line + "\n").getBytes("UTF-8"))

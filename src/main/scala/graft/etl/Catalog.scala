@@ -13,17 +13,21 @@ object Catalog {
   def tableExists(spark: SparkSession, name: String): Boolean =
     spark.catalog.tableExists(name)
 
-  /** Path-based existence guard for the parquet-directory warehouse. */
-  def pathExists(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  private def fs(spark: SparkSession, path: String) =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def deletePath(spark: SparkSession, path: String): Unit = {
-    val p = new Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(p, true)
-  }
+  /** Path-based existence guard for the parquet-directory warehouse. */
+  def pathExists(spark: SparkSession, path: String): Boolean =
+    fs(spark, path).exists(new Path(path))
+
+  /** Recursive delete; false when nothing was deleted. */
+  def deletePath(spark: SparkSession, path: String): Boolean =
+    fs(spark, path).delete(new Path(path), true)
+
+  /** Rename to an absent path; throws when the rename fails. */
+  def renamePath(spark: SparkSession, from: String, to: String): Unit =
+    if (!fs(spark, from).rename(new Path(from), new Path(to)))
+      throw new java.io.IOException(s"could not rename $from to $to")
 
   /** CREATE TABLE ... USING parquet if absent (J1 + I2). */
   def createTableIfAbsent(spark: SparkSession, name: String,

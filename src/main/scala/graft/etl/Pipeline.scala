@@ -19,15 +19,16 @@ import graft.sources.Tables
   * assigned in-plan, the "read back the key map" step IS the broadcast
   * join, and per-job atomic parquet writes replace transactions (I3).
   *
-  * Idempotency (I2): `run` skips the warehouse build when the target
+  * Idempotency (I2): `run` skips the warehouse write when the target
   * exists (the `inspect(engine).has_table` guard, `etl/etl.py:229-234`),
   * except dim_date which takes the MERGE-upsert path on every run
-  * (`etl/etl.py:179-224`).
+  * (`etl/etl.py:179-224`); a keyed dim is built only if it or
+  * fact_sales is written. The staging writes, dim builds and warehouse
+  * writes are independent actions and overlap on one
+  * [[Tables.withOverlapPool]], whose threads inherit the caller's job
+  * group; `run` returns only after all of them finish.
   */
 object Pipeline {
-
-  case class Warehouse(dimCustomer: DataFrame, dimProduct: DataFrame,
-    dimStore: DataFrame, dimDate: DataFrame, factSales: DataFrame)
 
   /** Extract + clean the 4 raw CSVs (dir layout from RetailDataGen). */
   def extractAndClean(spark: SparkSession, inputDir: String):
@@ -41,86 +42,76 @@ object Pipeline {
     Cleaning.cleanSales(
       Tables.readCsv(spark, s"$inputDir/sales", Tables.salesCsvSchema)))
 
-  /** Stage cleaned frames as CSVs for inspection (`etl/etl.py:127-137`). */
-  def stage(stagingDir: String, customers: DataFrame, products: DataFrame,
-      stores: DataFrame, sales: DataFrame): Unit = {
-    Tables.writeCsv(customers, s"$stagingDir/stg_customer")
-    Tables.writeCsv(products, s"$stagingDir/stg_product")
-    Tables.writeCsv(stores, s"$stagingDir/stg_store")
-    Tables.writeCsv(sales, s"$stagingDir/stg_sales")
-  }
-
-  /** Surrogate keys via [[ScalableKeys.withRankByKey]] — value-identical
-    * to `row_number() OVER (ORDER BY naturalId)` but with no
-    * single-partition window funnel (StarSpec proves the equivalence).
-    */
-  private def withKey(df: DataFrame, naturalId: String, key: String): DataFrame =
-    ScalableKeys.withRankByKey(df, naturalId, key)
-
-  /** Build the star in memory (lazy). */
-  def buildWarehouse(customers: DataFrame, products: DataFrame,
-      stores: DataFrame, sales: DataFrame): Warehouse = {
-    val dimCustomer = withKey(customers, "customer_id", "customer_key")
-    val dimProduct = withKey(products, "product_id", "product_key")
-    val dimStore = withKey(stores, "store_id", "store_key")
-    val dimDate = Star.dimDateFrom(sales, "sales_date")
-
-    // E1: the reference pulls {natural_id -> key} maps to the client and
-    // dict-maps them (etl/etl.py:263-282); here each map IS a broadcast
-    // hash join — the fact never shuffles. The hints are size-gated
-    // (Joins.broadcastIfSmall): a dim that outgrows the broadcast
-    // threshold falls back to a shuffle join instead of a driver OOM.
-    // The rank-keyed dims have RDD-severed lineage (no stats), so each
-    // gate sizes on the cleaned source frame the dim was derived from.
-    val fact = sales
-      .join(Joins.broadcastIfSmall(
-          dimCustomer.select("customer_id", "customer_key"), customers),
-        Seq("customer_id"), "left")
-      .join(Joins.broadcastIfSmall(
-          dimProduct.select("product_id", "product_key"), products),
-        Seq("product_id"), "left")
-      .join(Joins.broadcastIfSmall(
-          dimStore.select("store_id", "store_key"), stores),
-        Seq("store_id"), "left")
-      .join(Joins.broadcastIfSmall(
-          dimDate.select("calendar_date", "date_key")),
-        sales("sales_date") === col("calendar_date"), "left")
-      .select("sales_id", "customer_key", "product_key", "store_key",
-        "date_key", "quantity", "unit_price", "discount_pct", "total_amount")
-    Warehouse(dimCustomer, dimProduct, dimStore, dimDate, fact)
-  }
+  // keyed dims in fact-join order: (table, natural id, surrogate key)
+  private val KeyedDims = Seq(
+    ("dim_customer", "customer_id", "customer_key"),
+    ("dim_product", "product_id", "product_key"),
+    ("dim_store", "store_id", "store_key"))
 
   /** Full run: extract -> clean -> stage -> build -> load parquet
     * warehouse. Re-runs are no-ops for existing tables (I2) except
     * dim_date, which merges new dates (I1).
     */
   def run(spark: SparkSession, inputDir: String, stagingDir: String,
-      warehouseDir: String): Warehouse = {
+      warehouseDir: String): Unit = {
     val (customers, products, stores, sales) = extractAndClean(spark, inputDir)
-    stage(stagingDir, customers, products, stores, sales)
-    val wh = buildWarehouse(customers, products, stores, sales)
-
-    def loadIfAbsent(df: DataFrame, name: String): Unit = {
-      val path = s"$warehouseDir/$name"
-      if (!Catalog.pathExists(spark, path))
-        Tables.overwriteParquet(df, path)
+    val sources = Map("dim_customer" -> customers,
+      "dim_product" -> products, "dim_store" -> stores)
+    def at(table: String) = s"$warehouseDir/$table"
+    val absent = ("fact_sales" +: KeyedDims.map(_._1))
+      .filterNot(t => Catalog.pathExists(spark, at(t))).toSet
+    val toBuild = KeyedDims.filter(d => absent(d._1) || absent("fact_sales"))
+    val dimDate = Star.dimDateFrom(sales, "sales_date")
+    Tables.withOverlapPool(4) { pool =>
+      def submit[T](desc: String)(thunk: => T) =
+        Tables.submitJob(pool, spark, desc)(thunk)
+      // D3 keys: withRankByKey equals `row_number() OVER (ORDER BY id)`
+      // without a one-partition funnel (StarSpec). Its jobs are eager and
+      // the warehouse writes wait on them, so they are submitted first.
+      val builds = toBuild.map { case (t, id, key) =>
+        submit(s"build $t")(ScalableKeys.withRankByKey(sources(t), id, key))
+      }
+      val dateUpsert =
+        submit("upsert dim_date")(upsertDimDate(spark, dimDate, at("dim_date")))
+      // A2: stage cleaned frames as CSVs for inspection (etl/etl.py:127-137)
+      val staged = Seq("stg_customer" -> customers, "stg_product" -> products,
+        "stg_store" -> stores, "stg_sales" -> sales).map { case (n, df) =>
+          submit(s"stage $n")(Tables.writeCsv(df, s"$stagingDir/$n")) }
+      val dims = toBuild.map(_._1).zip(Tables.awaitAll(builds)).toMap
+      val dimWrites = dims.toSeq.filter(d => absent(d._1)).map { case (t, df) =>
+        submit(s"load $t")(Tables.overwriteParquet(df, at(t))) }
+      // E1: each {natural_id -> key} map (etl/etl.py:263-282) IS a
+      // broadcast join, size-gated so an outgrown dim shuffles instead;
+      // the RDD-keyed dims have no stats, so the gate sizes the source.
+      val factWrite = Option.when(absent("fact_sales")) {
+        val fact = KeyedDims.foldLeft(sales) { case (f, (t, id, key)) =>
+            f.join(Joins.broadcastIfSmall(dims(t).select(id, key), sources(t)),
+              Seq(id), "left") }
+          .join(Joins.broadcastIfSmall(
+              dimDate.select("calendar_date", "date_key")),
+            sales("sales_date") === col("calendar_date"), "left")
+          .select("sales_id", "customer_key", "product_key", "store_key",
+            "date_key", "quantity", "unit_price", "discount_pct",
+            "total_amount")
+        submit("load fact_sales")(Tables.overwriteParquet(fact, at("fact_sales")))
+      }
+      Tables.awaitAll(staged ++ dimWrites ++ factWrite :+ dateUpsert)
     }
-    loadIfAbsent(wh.dimCustomer, "dim_customer")
-    loadIfAbsent(wh.dimProduct, "dim_product")
-    loadIfAbsent(wh.dimStore, "dim_store")
-    loadIfAbsent(wh.factSales, "fact_sales")
+  }
 
-    // dim_date: staged MERGE-upsert semantics on every run
-    val datePath = s"$warehouseDir/dim_date"
-    val merged =
-      if (Catalog.pathExists(spark, datePath))
-        Star.upsertByKey(spark.read.parquet(datePath), wh.dimDate, "date_key")
-      else wh.dimDate
-    // write via temp + swap: can't overwrite a path while reading it
-    val tmp = s"$datePath._staged"
-    Tables.overwriteParquet(merged, tmp)
-    Tables.overwriteParquet(spark.read.parquet(tmp), datePath)
-    Catalog.deletePath(spark, tmp)
-    wh
+  /** dim_date's staged MERGE-upsert: merge into `path._staged` (a path
+    * can't be overwritten while it is read), then swap the staged
+    * directory in with a delete and a rename — no second parquet pass.
+    */
+  private def upsertDimDate(spark: SparkSession, dimDate: DataFrame,
+      path: String): Unit = {
+    val exists = Catalog.pathExists(spark, path)
+    val staged = s"$path._staged"
+    Tables.overwriteParquet(
+      if (exists) Star.upsertByKey(spark.read.parquet(path), dimDate, "date_key")
+      else dimDate, staged)
+    if (exists && !Catalog.deletePath(spark, path))
+      throw new java.io.IOException(s"could not delete $path")
+    Catalog.renamePath(spark, staged, path)
   }
 }

@@ -2,16 +2,18 @@ package graft.etl
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Joins
+import graft.sources.Tables
 
 /** The reference generator's validation report (SURVEY.md §2 K1-K3;
   * `scripts/generate_data.py:286-309`, `data/validation_report.txt`):
   * row counts, per-table null-cell totals, FK referential integrity —
-  * written as a small text report. Each check is one aggregation job;
-  * nothing is collected except the final scalar counts.
+  * written as a small text report. Five independent actions (one
+  * count-and-null-cells agg per table, one bad-FK count) overlap on a
+  * [[Tables.withOverlapPool]]; only the scalar counts are collected.
   */
 object ValidationReport {
 
@@ -27,30 +29,33 @@ object ValidationReport {
     }
   }
 
-  private def nullCellCount(df: DataFrame): Long =
-    df.agg(df.columns.map(c => sum(col(c).isNull.cast("long")))
-        .reduce(_ + _).as("n"))
-      .head().getLong(0)
+  /** (row count, null cells) of `df` in one aggregation. */
+  private def countAndNulls(df: DataFrame): (Long, Long) = {
+    val nulls = df.columns.map(c => sum(col(c).isNull.cast("long")))
+    val r = df.agg(count(lit(1)), nulls.reduce(_ + _)).head()
+    (r.getLong(0), r.getLong(1))
+  }
 
   def validate(customers: DataFrame, products: DataFrame, stores: DataFrame,
       sales: DataFrame): Report = {
-    val tables = Map("customers" -> customers, "products" -> products,
+    val tables = Seq("customers" -> customers, "products" -> products,
       "stores" -> stores, "sales" -> sales)
-    val counts = tables.map { case (n, df) => n -> df.count() }
-    val nulls = tables.map { case (n, df) => n -> nullCellCount(df) }
-    // FK integrity: sales rows whose FKs miss any dim (anti-join, E7/K2).
-    // The dims come from the seeded generator and scale with --rows, so
-    // the broadcast is SIZE-GATED (round-3 rule: no hard hint on
-    // anything that grows) — past the threshold Catalyst/AQE fall back
-    // to a shuffle anti-join.
-    val bad =
-      sales.join(Joins.broadcastIfSmall(customers.select("customer_id")),
-          Seq("customer_id"), "left_anti").count() +
-      sales.join(Joins.broadcastIfSmall(products.select("product_id")),
-          Seq("product_id"), "left_anti").count() +
-      sales.join(Joins.broadcastIfSmall(stores.select("store_id")),
-          Seq("store_id"), "left_anti").count()
-    Report(counts, nulls, bad)
+    // FK integrity (anti-join, E7/K2): a sales row counts once per dim it
+    // misses. The generated dims scale with --rows, so the broadcast is
+    // SIZE-GATED: past the threshold Catalyst/AQE shuffle the anti-join.
+    val badFk = Seq(customers -> "customer_id", products -> "product_id",
+        stores -> "store_id").map { case (dim, id) =>
+      sales.join(Joins.broadcastIfSmall(dim.select(id)), Seq(id), "left_anti")
+    }.reduce(_ unionByName _)
+    Tables.withOverlapPool(tables.size) { pool =>
+      val perTable = tables.map { case (n, df) =>
+        Tables.submitJob(pool, df.sparkSession, s"validate $n")(countAndNulls(df))
+      }
+      val bad = badFk.count()
+      val stats = tables.map(_._1).zip(Tables.awaitAll(perTable)).toMap
+      Report(stats.map { case (n, s) => n -> s._1 },
+        stats.map { case (n, s) => n -> s._2 }, bad)
+    }
   }
 
   def writeReport(report: Report, path: String): Unit = {

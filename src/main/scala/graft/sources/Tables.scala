@@ -621,6 +621,35 @@ object Tables {
       }
     })
 
+  /** Run `body` with a fresh [[overlapPool]], then wait for every task
+    * it submitted to finish — also when `body` throws — so no job
+    * outlives the call. The pool's threads are created on first submit
+    * from the calling thread, so they inherit its Spark job group.
+    */
+  def withOverlapPool[T](threads: Int)(
+      body: java.util.concurrent.ExecutorService => T): T = {
+    val pool = overlapPool(threads)
+    try body(pool)
+    finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue,
+        java.util.concurrent.TimeUnit.NANOSECONDS)
+    }
+  }
+
+  /** Wait for every future, then rethrow the first failure (in
+    * submission order) as its own cause, unwrapped from the
+    * `ExecutionException`, so callers see the real exception class.
+    */
+  def awaitAll[T](futures: Seq[java.util.concurrent.Future[T]]): Seq[T] = {
+    val results = futures.map(f => scala.util.Try(f.get()).recoverWith {
+      case e: java.util.concurrent.ExecutionException =>
+        scala.util.Failure(e.getCause)
+    })
+    results.collectFirst { case scala.util.Failure(e) => throw e }
+    results.map(_.get)
+  }
+
   /** Rows at or below which a presentation sort takes the
     * single-partition path. Measured round 12/13: a global orderBy
     * pays ~0.45 s of fixed range-exchange machinery (sampling pass +

@@ -1,8 +1,14 @@
 package graft
 
+import java.io.File
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 import graft.etl.{Catalog, Pipeline, RetailDataGen, ValidationReport}
 import graft.operators.{Salting, ScalableKeys}
@@ -53,6 +59,138 @@ class PipelineSpec extends SparkSpec {
     Pipeline.run(spark, s"$base/raw", s"$base/staging", s"$base/warehouse")
     assert(spark.read.parquet(s"$base/warehouse/fact_sales").count() === before)
     assert(spark.read.parquet(s"$base/warehouse/dim_date").count() === ddBefore)
+  }
+
+  /** Job starts per job group while `f` runs (SparkListener). A marker
+    * job in its own group runs last and drains the async listener bus:
+    * events reach a listener in order, so once the marker's start has
+    * arrived every earlier job start has too. Also returns the ids of
+    * jobs that started but had not ended by then.
+    */
+  private def jobsByGroup(f: => Unit): (Map[String, Int], Set[Int]) = {
+    import scala.jdk.CollectionConverters._
+    val counts = new ConcurrentHashMap[String, Int]()
+    val open = ConcurrentHashMap.newKeySet[Int]()
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val g = Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("")
+        if (g == "drain-marker") drained.countDown()
+        else { counts.merge(g, 1, _ + _); open.add(j.jobId) }
+      }
+      override def onJobEnd(j: SparkListenerJobEnd): Unit = open.remove(j.jobId)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      try f finally {
+        sc.setJobGroup("drain-marker", "drain-marker")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      }
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus not drained")
+      (counts.asScala.toMap, open.asScala.toSet)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def inGroup(group: String)(f: => Unit): Unit = {
+    spark.sparkContext.setJobGroup(group, group)
+    try f finally spark.sparkContext.clearJobGroup()
+  }
+
+  /** Part files of a table directory: name -> mtime. */
+  private def partFiles(dir: String): Map[String, Long] =
+    new File(dir).listFiles().filter(_.getName.startsWith("part-"))
+      .map(f => f.getName -> f.lastModified()).toMap
+
+  test("second run: keyed dims and fact untouched, dim_date identical, fewer jobs") {
+    val b = Files.createTempDirectory("graft_rerun").toString
+    RetailDataGen.writeAll(spark, s"$b/raw", baseRows = 200)
+    def load(): Unit =
+      Pipeline.run(spark, s"$b/raw", s"$b/staging", s"$b/warehouse")
+    val (first, _) = jobsByGroup(inGroup("etl-first")(load()))
+    val tables = Seq("dim_customer", "dim_product", "dim_store", "fact_sales")
+    val filesBefore = tables.map(t => t -> partFiles(s"$b/warehouse/$t")).toMap
+    val dateBefore = spark.read.parquet(s"$b/warehouse/dim_date").collect()
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val (second, open) = jobsByGroup(inGroup("etl-second")(load()))
+    // no key assignment: withSequentialIds persists its RDD hop
+    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(cachedBefore))
+    // every job ran under the caller's group, pool threads included
+    assert(first.keySet === Set("etl-first"))
+    assert(second.keySet === Set("etl-second"))
+    assert(open.isEmpty)
+    assert(second("etl-second") < first("etl-first"))
+    tables.foreach { t =>
+      assert(filesBefore(t).nonEmpty)
+      assert(partFiles(s"$b/warehouse/$t") === filesBefore(t), t)
+    }
+    val dateAfter = spark.read.parquet(s"$b/warehouse/dim_date").collect()
+    assert(dateAfter.sortBy(_.getInt(0)).toSeq ===
+      dateBefore.sortBy(_.getInt(0)).toSeq)
+    assert(!new File(s"$b/warehouse/dim_date._staged").exists())
+  }
+
+  test("run with a missing raw sales directory throws the AnalysisException") {
+    val b = Files.createTempDirectory("graft_nosales").toString
+    RetailDataGen.writeAll(spark, s"$b/raw", baseRows = 50)
+    Catalog.deletePath(spark, s"$b/raw/sales")
+    intercept[AnalysisException](
+      Pipeline.run(spark, s"$b/raw", s"$b/staging", s"$b/warehouse"))
+    eventually(timeout(10.seconds)) {
+      assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    }
+  }
+
+  test("a failed overlapped write surfaces its own exception after the rest finish") {
+    val b = Files.createTempDirectory("graft_badstage").toString
+    RetailDataGen.writeAll(spark, s"$b/raw", baseRows = 50)
+    // staging under a regular file: the four staging writes fail on the
+    // pool while the warehouse writes succeed
+    Files.createFile(java.nio.file.Paths.get(s"$b/not_a_dir"))
+    // an IOException, not the pool's ExecutionException wrapper
+    val (_, open) = jobsByGroup(intercept[java.io.IOException](
+      Pipeline.run(spark, s"$b/raw", s"$b/not_a_dir/staging", s"$b/warehouse")))
+    assert(open.isEmpty)
+    Seq("dim_customer", "dim_product", "dim_store", "dim_date", "fact_sales")
+      .foreach(t => assert(new File(s"$b/warehouse/$t/_SUCCESS").exists(), t))
+    eventually(timeout(10.seconds)) {
+      assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    }
+  }
+
+  test("validation report on crafted bad data equals the one-check-per-job form") {
+    val customers = Seq((1, "a"), (2, null), (2, "b"), (3, "c"))
+      .toDF("customer_id", "name")
+    val products = Seq((10, "p"), (11, null)).toDF("product_id", "name")
+    val stores = Seq((100, "s")).toDF("store_id", "city")
+    val sales = Seq[(Int, Integer, Integer, Integer, java.lang.Double)](
+      (1, 1, 10, 100, 1.0),    // clean
+      (2, 9, 10, 100, 2.0),    // orphan customer
+      (3, null, 10, 100, 3.0), // null customer FK
+      (4, 9, 99, 100, null),   // misses two dims, one null cell
+      (5, 2, 11, 100, 5.0))    // duplicated customer id: still one match
+      .toDF("sales_id", "customer_id", "product_id", "store_id", "amount")
+    val r = ValidationReport.validate(customers, products, stores, sales)
+
+    val tables = Map("customers" -> customers, "products" -> products,
+      "stores" -> stores, "sales" -> sales)
+    def nullCells(df: DataFrame): Long = df.agg(df.columns
+      .map(c => sum(col(c).isNull.cast("long"))).reduce(_ + _)).head().getLong(0)
+    def anti(dim: DataFrame, id: String): Long =
+      sales.join(dim.select(id), Seq(id), "left_anti").count()
+    val old = ValidationReport.Report(
+      tables.map { case (n, df) => n -> df.count() },
+      tables.map { case (n, df) => n -> nullCells(df) },
+      anti(customers, "customer_id") + anti(products, "product_id") +
+        anti(stores, "store_id"))
+    assert(r === old)
+    assert(r.badFkRows === 4)
+    assert(r.rowCounts === Map("customers" -> 4, "products" -> 2,
+      "stores" -> 1, "sales" -> 5))
+    assert(r.nullCells === Map("customers" -> 1, "products" -> 1,
+      "stores" -> 0, "sales" -> 2))
   }
 
   test("validation report: 0 nulls in cleaned frames, 0 bad FKs (K1-K3)") {
